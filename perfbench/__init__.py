@@ -1,0 +1,1 @@
+"""Repository benchmark; entry point: ``python3 perfbench/run.py``."""
