@@ -33,6 +33,7 @@ Scale design (the 100 TB story):
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -518,70 +519,78 @@ def pagerank_oracle_sql(
 
 
 def bfs_hops(
-    edges: DataFrame,
+    membership: DataFrame,
     seeds: DataFrame,
     max_hops: int = 3,
-    src: str = "src",
-    dst: str = "dst",
     node: str = "node",
-    broadcast_frontier: bool | None = None,
+    group: str = "group",
     broadcast_max_rows: int = 5_000_000,
 ) -> DataFrame:
-    """Multi-source BFS: min-hop distance from any seed, bounded by
-    ``max_hops`` (nodes further than that are absent).
+    """Multi-source BFS over a membership relation: min-hop distance
+    (``node``, ``dist``) from any seed, bounded by ``max_hops`` (nodes
+    further than that are absent; seeds are at 0 even without
+    membership rows).
 
-    Per round: one join (*frontier* onto edges — only the rows
-    reached for the first time last round, never the whole
-    accumulated distance set, so round k costs O(frontier_k x degree)
-    rather than re-expanding every prior round) + one dedup + one
-    anti-join against the reached set. Same Pregel cost shape as
-    :func:`pagerank`, all-integer so no float portability machinery.
-    At 100 TB the edge set dominates and is persisted once; a small
-    frontier broadcasts, making the round a map-side join over those
-    persisted edges — no per-round edge shuffle at all.
+    ``membership`` holds (``node``, ``group``) rows and ``seeds`` a
+    ``node`` column. Two nodes are adjacent when they share a group;
+    an undirected edge list is the special case of one group per
+    edge. The projected node-node graph is never built: it grows with
+    the sum of squared group sizes, the relation only with its rows.
+    Rows with a null node or group join nothing.
 
-    ``broadcast_frontier=None`` (default) decides **per round** from
-    the frontier's actual row count (free — the frontier is eagerly
-    checkpointed anyway): broadcast while ``<= broadcast_max_rows``,
-    shuffle join beyond, so a corpus-scale hop can never hit Spark's
-    8 GB broadcast ceiling or the driver's memory. True/False force
-    one mode for every round. Oracle: ``bfs_oracle_sql`` unrolls the
-    rounds into CTEs (the k-hop-neighborhood / blast-radius shape).
+    Per round, three semi/anti-joins and one dedup shuffle:
+    ``touched = membership ⋉ frontier`` (on node), ``reached =
+    membership ⋉ touched`` (on group), ``frontier' = (reached ▷
+    seen).distinct()``. The new frontier is a lazy ``localCheckpoint``
+    whose ``count`` is the round's only action: it materializes the
+    checkpoint and is the emptiness check. The result is the union of
+    the per-round frontiers, so no distance set is re-checkpointed.
+
+    Broadcast rule, from counts already held: the frontier by its
+    count, ``seen`` by the running sum of frontier counts, the touched
+    groups while the membership row count is within
+    ``broadcast_max_rows``. Above the bound (everywhere, at 0) a join
+    gets no hint and is left to Spark's size estimates and AQE, so a
+    corpus-scale hop never hits Spark's 8 GB broadcast ceiling.
+
+    Cached state: the membership projection is persisted and counted
+    once, then unpersisted before returning, also on error. The
+    result reads the per-round frontier checkpoints, which the caller
+    owns. Oracle: ``bfs_oracle_sql`` over the membership self-join on
+    group with distinct nodes.
     """
-    e = edges.select(
-        F.col(src).alias("e_src"), F.col(dst).alias("e_dst")
-    ).localCheckpoint(eager=True)
-    dist = seeds.select(
-        F.col(node).alias("node"), F.lit(0).cast("int").alias("dist")
-    ).localCheckpoint(eager=True)
-    frontier = dist
-    n_frontier = None  # None = not yet counted (first round: seeds)
-    for _ in range(max_hops):
-        # in unit-weight BFS any node already in `dist` was reached in
-        # <= k hops, so an anti-join (not a min-agg over the union) is
-        # enough to keep only first-time reachings
-        if broadcast_frontier is None:
-            if n_frontier is None:
-                n_frontier = frontier.count()
-            bcast = n_frontier <= broadcast_max_rows
-        else:
-            bcast = broadcast_frontier
-        fr = F.broadcast(frontier) if bcast else frontier
-        expanded = (
-            e.join(fr, e.e_src == frontier.node)
-            .select(F.col("e_dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-            .dropDuplicates(["node"])
-        )
-        frontier = expanded.join(
-            dist, "node", "left_anti"
-        ).localCheckpoint(eager=True)
-        # counting the checkpointed frontier doubles as the emptiness
-        # check and feeds the next round's broadcast decision
-        n_frontier = frontier.count()
-        if n_frontier == 0:
-            break
-        dist = dist.unionByName(frontier).localCheckpoint(eager=True)
-    return dist.select("node", F.col("dist").cast("int").alias("dist"))
+    m = membership.select(
+        F.col(node).alias("node"), F.col(group).alias("grp")
+    ).dropna().persist()
+
+    def bc(df: DataFrame, n: int) -> DataFrame:
+        return F.broadcast(df) if n <= broadcast_max_rows else df
+
+    def checkpoint(df: DataFrame) -> DataFrame:
+        # serialized blocks: a deserialized row takes many times its bytes
+        return df.distinct().localCheckpoint(False, StorageLevel.MEMORY_AND_DISK)
+
+    try:
+        n_m = m.count()
+        frontier = checkpoint(seeds.select(F.col(node).alias("node")))
+        n_frontier = n_seen = frontier.count()
+        seen = frontier
+        dist = frontier.select("node", F.lit(0).alias("dist"))
+        for hop in range(1, max_hops + 1):
+            if n_frontier == 0:
+                break
+            touched = m.join(bc(frontier, n_frontier), "node", "left_semi")
+            reached = m.join(bc(touched.select("grp"), n_m), "grp", "left_semi")
+            frontier = checkpoint(
+                reached.select("node").join(bc(seen, n_seen), "node", "left_anti")
+            )
+            n_frontier = frontier.count()
+            n_seen += n_frontier
+            seen = seen.unionByName(frontier)
+            dist = dist.unionByName(frontier.select("node", F.lit(hop).alias("dist")))
+    finally:
+        m.unpersist()
+    return dist
 
 
 def bfs_oracle_sql(

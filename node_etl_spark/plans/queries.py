@@ -5408,33 +5408,22 @@ _BFS_SEEDS_SQL = """
     doc="Multi-source BFS (functions/graph.py bfs_hops): min-hop "
         "distance from seed parts over the co-purchase graph, bounded "
         "at 3 hops — the blast-radius / k-hop-neighborhood shape "
-        "(recall impact, recommendation spread). Per round one "
-        "frontier join + one integer min-agg; all-integer, so the "
-        "unrolled-CTE oracle matches exactly.",
+        "(recall impact, recommendation spread). The graph is the "
+        "part-order membership relation (lineitem), never its part-part "
+        "projection; each round is two broadcast semi-joins over it, an "
+        "anti-join against the reached parts and one dedup, with one "
+        "action. All-integer, so the unrolled-CTE oracle over the "
+        "projected edges matches exactly.",
 )
 def q130_part_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") != F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
-        )
-        # no distinct: BFS is invariant under edge multiplicity and
-        # dedups each round's frontier anyway — dropping the 7M-row
-        # distinct shuffle is free
+    return G.bfs_hops(
+        li,
+        li.filter("l_partkey % 100 = 0"),
+        max_hops=3,
+        node="l_partkey",
+        group="l_orderkey",
     )
-    seeds = (
-        li.filter("l_partkey % 100 = 0")
-        .select(F.col("l_partkey").alias("node"))
-        .distinct()
-    )
-    return G.bfs_hops(edges, seeds, max_hops=3)
 
 
 def _init_q130_oracle() -> None:

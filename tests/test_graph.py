@@ -139,15 +139,22 @@ def test_pagerank_matches_unrolled_oracle_shapes(spark):
     assert "1e15" in sql and "AS BIGINT" in sql
 
 
+def _pair_groups(spark, pairs):
+    # one group per undirected pair: the edge-list special case of a
+    # membership relation
+    rows = [(v, g) for g, pair in enumerate(pairs) for v in pair]
+    return spark.createDataFrame(rows, "node long, group long")
+
+
 def test_bfs_hops_min_distance(spark):
     from node_etl_spark.functions.graph import bfs_hops
 
     # path 1-2-3-4 plus shortcut 1-4: dist(4) must take the shortcut
-    pairs = _sym([(1, 2), (2, 3), (3, 4), (1, 4)])
+    pairs = [(1, 2), (2, 3), (3, 4), (1, 4)]
     seeds = spark.createDataFrame([(1,)], "node long")
     got = {
         r.node: r.dist
-        for r in bfs_hops(_edges(spark, pairs), seeds, max_hops=3).collect()
+        for r in bfs_hops(_pair_groups(spark, pairs), seeds, max_hops=3).collect()
     }
     assert got == {1: 0, 2: 1, 3: 2, 4: 1}
 
@@ -155,13 +162,69 @@ def test_bfs_hops_min_distance(spark):
 def test_bfs_hops_bounds_horizon(spark):
     from node_etl_spark.functions.graph import bfs_hops
 
-    pairs = _sym([(1, 2), (2, 3), (3, 4), (4, 5)])
+    pairs = [(1, 2), (2, 3), (3, 4), (4, 5)]
     seeds = spark.createDataFrame([(1,)], "node long")
     got = {
         r.node: r.dist
-        for r in bfs_hops(_edges(spark, pairs), seeds, max_hops=2).collect()
+        for r in bfs_hops(_pair_groups(spark, pairs), seeds, max_hops=2).collect()
     }
     assert got == {1: 0, 2: 1, 3: 2}  # 4 and 5 beyond the horizon
+
+
+# node 3 is in groups 10, 11 and 12; group 13 is a singleton; the
+# (4, 11) and (6, 12) rows are duplicated; seed 99 has no membership;
+# the null node and null group rows join nothing
+_BFS_MEMBERSHIP = [
+    (1, 10), (2, 10), (3, 10),
+    (3, 11), (4, 11), (4, 11),
+    (3, 12), (5, 12), (6, 12), (6, 12),
+    (7, 13),
+    (6, 14), (8, 14),
+    (8, 15), (9, 15),
+    (9, 16), (20, 16),
+    (None, 14), (20, None),
+]
+
+
+def test_bfs_hops_matches_oracle_on_membership(spark):
+    import duckdb
+
+    from node_etl_spark.functions.graph import bfs_hops, bfs_oracle_sql
+
+    con = duckdb.connect()
+    con.execute('CREATE TABLE m (node BIGINT, "group" BIGINT)')
+    con.executemany("INSERT INTO m VALUES (?, ?)", _BFS_MEMBERSHIP)
+    edges_sql = (
+        'SELECT a.node AS src, b.node AS dst FROM m a JOIN m b'
+        ' ON a."group" = b."group" AND a.node <> b.node'
+    )
+    seeds_sql = "SELECT * FROM (VALUES (1), (7), (99)) s(node)"
+    membership = spark.createDataFrame(_BFS_MEMBERSHIP, "node long, group long")
+    seeds = spark.createDataFrame([(1,), (7,), (99,), (1,)], "node long")
+    for hops in (1, 3):
+        sql = bfs_oracle_sql(edges_sql, seeds_sql, hops)
+        want = sorted(con.execute(sql).fetchall(), key=repr)
+        for max_rows in (5_000_000, 0):
+            out = bfs_hops(membership, seeds, max_hops=hops, broadcast_max_rows=max_rows)
+            assert out.columns == ["node", "dist"]
+            got = sorted((tuple(r) for r in out.collect()), key=repr)
+            assert got == want, (hops, max_rows)
+
+
+def test_bfs_hops_releases_membership(spark):
+    from node_etl_spark.functions.graph import bfs_hops
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    membership = spark.createDataFrame(_BFS_MEMBERSHIP, "node long, group long")
+    seeds = spark.createDataFrame([(1,)], "node long")
+    out = bfs_hops(membership, seeds, max_hops=3)
+    # the seed set and three frontiers are checkpointed and read by the
+    # result; the persisted membership projection is gone
+    assert len(persisted() - before) == 4
+    assert out.count() == 7
 
 
 def test_pagerank_keeps_zero_indegree_sources(spark):

@@ -102,6 +102,21 @@ def test_json_array_sink_pins_timestamp_and_date_format(spark, tmp_path):
     ]
 
 
+def test_json_array_sink_pins_non_finite_doubles(spark, tmp_path):
+    # NaN and +-Inf have no JSON token: the sink emits them as quoted
+    # strings (Jackson to_json), where the reference's JSON.stringify
+    # emits null — a pinned deviation recorded in the CHANGELOG
+    df = spark.createDataFrame(
+        [(1, float("nan")), (2, float("inf")), (3, float("-inf")), (4, 1.5)],
+        "id bigint, x double",
+    )
+    dest = str(tmp_path / "arr.json")
+    JsonArraySink(dest).write(df, Context())
+    # a bare NaN/Infinity token would parse back as a float, not a str
+    data = sorted(json.load(open(dest)), key=lambda d: d["id"])
+    assert [d["x"] for d in data] == ["NaN", "Infinity", "-Infinity", 1.5]
+
+
 def test_json_array_sink_dotted_column_names(spark, tmp_path):
     # literal column names containing dots must serialize as-is, not
     # be parsed as nested-field references (the F.col(c) hazard)

@@ -302,6 +302,22 @@ def test_driver_contract_consistency():
     assert {n for n in qs if n not in osql} == set()
 
 
+def test_q130_part_reach_matches_oracle(spark, sf_dir):
+    import duckdb
+
+    from scripts.check_oracle import normalize
+
+    q = QUERIES["q130_part_reach"]
+    df = q.fn(spark, sf_dir)
+    got = normalize([tuple(r) for r in df.collect()], df.columns)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{sf_dir}/lineitem.parquet'")
+    res = con.execute(q.oracle)
+    cols = [d[0] for d in res.description]
+    assert sorted(df.columns) == sorted(cols)
+    assert got and got == normalize(res.fetchall(), cols)
+
+
 def test_gate_schemas_are_driver_canonicalizable(spark, sf_dir):
     # r8 verdict ask #3: the driver's pandas canonicalizer hashes every
     # output column through sort_values/factorize, which crashes on
